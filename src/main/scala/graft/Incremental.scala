@@ -241,19 +241,9 @@ object Incremental {
         sum(when(!col("_wl"), 1L).otherwise(0L)).as("n_survivors"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val survivors = deduped.filter(!col("_wl")).drop("_wl")
-    val enriched0 = RefCheck(
-      SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
-      tables.ref, conf)
-    val withFirst = FirstSeen(enriched0, conf, state.seenValues,
-      aux = Some(survivors))
-    val stateful = Frequency(withFirst, conf,
-      state.freqCounts, state.firedBuckets, aux = Some(survivors))
-    val severities = conf.severityBands.map(_._2)
-    val sinkAggs = severities.map(s =>
-      sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L))
-        .as(s"sink_$s"))
-    val enriched = Scoring(stateful, conf)
-      .observe(obsOut, count(lit(1)).as("n_enriched"), sinkAggs: _*)
+    val enriched = Pipeline.detect(survivors, tables, conf, state)
+      .observe(obsOut, count(lit(1)).as("n_enriched"),
+        Pipeline.sinkCountAggs(conf, "sink_"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     try {
@@ -266,6 +256,7 @@ object Incremental {
       // an EMPTY batch folds the CollectMetrics nodes away entirely
       // (PropagateEmptyRelation) — all counters are genuinely 0 then; any
       // other metric loss is a bug and must fail loud
+      val severities = conf.severityBands.map(_._2)
       val expectedKeys = Seq("n_input", "n_parse_ok", "n_after_dedup",
         "n_survivors", "n_enriched") ++ severities.map(s => s"sink_$s")
       require(nEnriched == 0L || expectedKeys.forall(m.contains),
@@ -312,7 +303,7 @@ object Incremental {
       val runDir = s"$stateDir/run-$runId"
 
       val trackedVals = conf.trackedFields.map(f =>
-        enriched.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
+        enriched.filter(FirstSeen.tracked(f))
           .select(lit(f).as("field"), col(f).as("value"))).reduce(_ unionByName _)
         .distinct()
       val seenSnap = state.seenValues match {

@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.model._
 import graft.operators._
+import graft.sources.Source
 
 /** Rule/lookup tables for one pipeline run (the sig filter's rules.json /
   * ioc.json / ref.json analogues, SURVEY §1.1). All broadcast-small by
@@ -39,44 +41,41 @@ object Pipeline {
       firedBuckets: Option[DataFrame] = None)
   object State { val empty: State = State(None, None, None, None) }
 
+  /** C3 IOC → C4 sig → C5 ref: the stateless broadcast lookups over whitelist
+    * survivors (also the streaming prefix, StreamPipeline.enrichStream). */
+  def lookups(survivors: DataFrame, tables: RuleTables, conf: PipelineConf): DataFrame =
+    RefCheck(SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
+      tables.ref, conf)
+
+  /** C3→C8 over whitelist survivors: [[lookups]] → C6 first-seen → C7
+    * frequency → C8 scoring. C6/C7 read `survivors` once per branch (value →
+    * min-key aggregations, per-sec counts, join-backs), so a caller that
+    * persists `survivors` shares one materialization across all branches
+    * instead of recomputing scan→parse→joins (docs/plans/enrich_full.txt). */
+  def detect(survivors: DataFrame, tables: RuleTables, conf: PipelineConf,
+      state: State): DataFrame = {
+    val withFirst = FirstSeen(lookups(survivors, tables, conf), conf,
+      state.seenValues, aux = Some(survivors))
+    Scoring(Frequency(withFirst, conf, state.freqCounts, state.firedBuckets,
+      aux = Some(survivors)), conf)
+  }
+
+  /** parse → C1 fp-dedup → C2 whitelist. */
+  private def survivors(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
+      state: State): DataFrame =
+    Whitelist(Dedup(Parse(turns, conf), conf, state.fpSeen), tables.whitelist)
+
   /** The pure transform: transcripts in, enriched detection rows out. */
   def enrich(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
       state: State = State.empty): DataFrame =
-    enrichPlanned(turns, tables, conf, state, persistIntermediates = false)._1
+    detect(survivors(turns, tables, conf, state), tables, conf, state)
 
-  /** enrich with explicit persist points at the two diamond-shaped stage
-    * boundaries — FirstSeen consumes its input once per tracked field (the
-    * value→min-key aggregations) plus the join-back, and Frequency consumes
-    * its input for both the per-sec counts and the join-back. Without
-    * persisting, Spark recomputes the whole upstream (scan→parse→joins) for
-    * every branch; with it, branches share one materialization (the plan-audit
-    * driver for this: docs/plans/enrich_full.txt). Callers own cleanup via the
-    * returned thunk. */
+  /** [[enrich]] with its ONE persist point, the survivors. Callers own
+    * cleanup via the returned thunk. */
   def enrichPlanned(turns: DataFrame, tables: RuleTables, conf: PipelineConf,
-      state: State = State.empty, persistIntermediates: Boolean = true)
-      : (DataFrame, () => Unit) = {
-    val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def p(df: DataFrame): DataFrame =
-      if (!persistIntermediates) df
-      else {
-        val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        handles += c
-        c
-      }
-    val parsed = Parse(turns, conf)
-    val deduped = Dedup(parsed, conf, state.fpSeen)
-    // the ONE persist: survivors feed (a) the main narrow enrich chain once
-    // and (b) the slim first-seen/frequency aggregations, which read pruned
-    // column batches from the cache
-    val survivors = p(Whitelist(deduped, tables.whitelist))
-    val enriched = RefCheck(
-      SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
-      tables.ref, conf)
-    val withFirst = FirstSeen(enriched, conf, state.seenValues,
-      aux = Some(survivors))
-    val stateful = Frequency(withFirst, conf, state.freqCounts,
-      state.firedBuckets, aux = Some(survivors))
-    (Scoring(stateful, conf), () => handles.foreach(_.unpersist()))
+      state: State = State.empty): (DataFrame, () => Unit) = {
+    val cached = survivors(turns, tables, conf, state).persist(MEMORY_AND_DISK)
+    (detect(cached, tables, conf, state), () => cached.unpersist())
   }
 
   // latest managed enrich: (identity key, result, cache-release thunk)
@@ -120,7 +119,7 @@ object Pipeline {
         // against the cached survivors; with the result cached they read one
         // materialization (guide §5: reuse justifies the persist, and the
         // managed lifecycle already bounds it to one live plan)
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val cached = df.persist(MEMORY_AND_DISK)
         managedRef.set(Some((key, cached, () => { cached.unpersist(); cleanup() })))
         cached
     }
@@ -183,6 +182,31 @@ object Pipeline {
   def saltedBySeverity(df: DataFrame, saltBuckets: Int): DataFrame =
     df.repartition(col("severity"), pmod(xxhash64(col("conv_id")), lit(saltBuckets)))
 
+  /** Routed rows per severity band, one aggregate column `<prefix><severity>`
+    * each (route/routeViaTable's counts, the Incremental manifest's sinks). */
+  def sinkCountAggs(conf: PipelineConf, prefix: String): Seq[Column] =
+    conf.severityBands.map { case (_, s) =>
+      sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L)).as(s"$prefix$s") }
+
+  /** route's aggregates and their values → per-sink counts plus "total". */
+  private def routeAggs(conf: PipelineConf): Seq[Column] =
+    count(lit(1)).as("n_total") +: sinkCountAggs(conf, "n_")
+  private def routeCounts(conf: PipelineConf, m: Map[String, Any]): Map[String, Long] =
+    conf.severityBands.map { case (_, s) => s -> m(s"n_$s").asInstanceOf[Long] }.toMap +
+      ("total" -> m("n_total").asInstanceOf[Long])
+
+  /** The C9 sink set over `src`, one independent write each: salted routed
+    * alert docs partitioned by severity, the signature and the sink rollups. */
+  private def sinkWrites(src: DataFrame, conf: PipelineConf,
+      outDir: String): Seq[() => Unit] = Seq(
+    () => Source.writeTable(
+      saltedBySeverity(alertDocs(src.filter(col("routed"))), conf.saltBuckets),
+      conf.sinkFormat, s"$outDir/alerts_all", partitionCols = Seq("severity")),
+    () => Source.writeTable(rollupBySignature(src), conf.sinkFormat,
+      s"$outDir/rollup_signature"),
+    () => Source.writeTable(rollupBySink(src), conf.sinkFormat,
+      s"$outDir/rollup_sink"))
+
   /** Write-once C9 fan-out for very large batches (SURVEY §2.9 R2 at
     * 100 TB): [[route]]'s MEMORY_AND_DISK persist of the full-width enriched
     * set is right for in-memory-sized batches but becomes a 100-TB spill at
@@ -196,7 +220,6 @@ object Pipeline {
     * table doubles as the queryable enriched archive. */
   def routeViaTable(spark: SparkSession, enriched: DataFrame, conf: PipelineConf,
       outDir: String): Map[String, Long] = {
-    import graft.sources.Source
     Source.writeTable(saltedBySeverity(enriched, conf.saltBuckets),
       conf.sinkFormat, s"$outDir/enriched")
     // read back with the KNOWN schema: schema-light sink formats (json/csv)
@@ -208,23 +231,12 @@ object Pipeline {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val derivations = Seq[() => Unit](
-      () => Source.writeTable(
-        saltedBySeverity(alertDocs(written.filter(col("routed"))), conf.saltBuckets),
-        conf.sinkFormat, s"$outDir/alerts_all", partitionCols = Seq("severity")),
-      () => Source.writeTable(rollupBySignature(written), conf.sinkFormat,
-        s"$outDir/rollup_signature"),
-      () => Source.writeTable(rollupBySink(written), conf.sinkFormat,
-        s"$outDir/rollup_sink"))
+    val derivations = sinkWrites(written, conf, outDir)
     derivations.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
     // per-sink counts from ONE pruned aggregation over the written table
     // (severity + routed columns only — not an observe over a full pass)
-    val severities = conf.severityBands.map(_._2)
-    val aggs = count(lit(1)).as("n_total") +: severities.map(s =>
-      sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L)).as(s"n_$s"))
-    val m = written.agg(aggs.head, aggs.tail: _*).first()
-    severities.zipWithIndex.map { case (s, i) => s -> m.getLong(i + 1) }.toMap +
-      ("total" -> m.getLong(0))
+    val m = written.select(routeAggs(conf): _*).first()
+    routeCounts(conf, m.getValuesMap[Any](m.schema.fieldNames.toSeq))
   }
 
   /** C9 fan-out: ONE pass over the enriched rows (persist), then K filtered
@@ -233,13 +245,10 @@ object Pipeline {
     * plus "total" = all enriched rows. */
   def route(spark: SparkSession, enriched: DataFrame, conf: PipelineConf,
       outDir: String): Map[String, Long] = {
-    import org.apache.spark.sql.Observation
-    val cached = enriched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = enriched.persist(MEMORY_AND_DISK)
     try {
       val obs = Observation("sinks")
-      val severities = conf.severityBands.map(_._2)
-      val aggs = count(lit(1)).as("n_total") +: severities.map(s =>
-        sum(when(col("routed") && col("severity") === s, 1L).otherwise(0L)).as(s"n_$s"))
+      val aggs = routeAggs(conf)
       // materialize the cache + deliver the observation with a PLAIN action
       // first: a partitioned write whose routed subset is empty drops
       // observed metrics entirely (Spark 4.1) and obs.get would hang
@@ -252,18 +261,9 @@ object Pipeline {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = Seq[() => Unit](
-        () => graft.sources.Source.writeTable(
-          saltedBySeverity(alertDocs(cached.filter(col("routed"))), conf.saltBuckets),
-          conf.sinkFormat, s"$outDir/alerts_all", partitionCols = Seq("severity")),
-        () => graft.sources.Source.writeTable(rollupBySignature(cached),
-          conf.sinkFormat, s"$outDir/rollup_signature"),
-        () => graft.sources.Source.writeTable(rollupBySink(cached),
-          conf.sinkFormat, s"$outDir/rollup_sink"))
+      val writes = sinkWrites(cached, conf, outDir)
       writes.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
-      val m = obs.get
-      severities.map(s => s -> m(s"n_$s").asInstanceOf[Long]).toMap +
-        ("total" -> m("n_total").asInstanceOf[Long])
+      routeCounts(conf, obs.get)
     } finally cached.unpersist()
   }
 }

@@ -206,6 +206,11 @@ object RefCheck {
   * `seen_values` state, and join the tiny firsts table back (AQE broadcasts it
   * when small). */
 object FirstSeen {
+  /** Rows that carry a trackable value of field `f` — the candidates for a
+    * first sighting and the values recorded as seen. */
+  def tracked(f: String): Column =
+    col("parse_ok") && col(f).isNotNull && col(f) =!= ""
+
   /** `aux`: the row source used for the value→min-key aggregations — pass the
     * PERSISTED upstream (e.g. post-whitelist survivors) so the slim aggs read
     * pruned cached columns instead of recomputing the enrich chain. Must
@@ -216,7 +221,7 @@ object FirstSeen {
     val src = aux.getOrElse(df)
     val rowKey = struct(col("ts_us"), col("conv_id"), col("turn_idx"))
     val withNew = conf.trackedFields.foldLeft(df) { (acc, f) =>
-      val cand = src.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
+      val cand = src.filter(tracked(f))
       val firstsAll = cand.groupBy(col(f).as("_v"))
         .agg(min(rowKey).as("_w"))
       val firsts = seenValues match {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.RuleTables
+import graft.{Pipeline, RuleTables}
 import graft.model._
 import graft.operators._
 
@@ -32,10 +32,7 @@ object StreamPipeline {
       .withWatermark("ts", watermarkDelay)
       .withColumn("fp", Dedup.fpExpr(conf))
       .dropDuplicatesWithinWatermark("fp")
-    val survivors = Whitelist(parsed, tables.whitelist)
-    val enriched = RefCheck(
-      SigRules(IocEnrich(survivors, tables.ioc, conf), tables.sigRules),
-      tables.ref, conf)
+    val enriched = Pipeline.lookups(Whitelist(parsed, tables.whitelist), tables, conf)
     val hits = concat(col("hits_ioc"), col("hits_sig"), col("hits_ref"))
     enriched
       .withColumn("hits", hits)
@@ -53,7 +50,7 @@ object StreamPipeline {
     val spark = parsed.sparkSession
     import spark.implicits._
     val cands = conf.trackedFields.map { f =>
-      parsed.filter(col("parse_ok") && col(f).isNotNull && col(f) =!= "")
+      parsed.filter(FirstSeen.tracked(f))
         .select(lit(f).as("field"), col(f).as("value"),
           col("conv_id"), col("turn_idx"), col("ts_us"))
     }.reduce(_ unionByName _).as[FirstSeenEvent]

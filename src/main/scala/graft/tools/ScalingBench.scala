@@ -41,10 +41,8 @@ object ScalingBench {
     val conf = PipelineConf()
     val turns = graft.sources.Source.readTable(spark, conf, s"$benchDir/transcripts")
     val tables = graft.sources.Source.readRuleTables(spark, conf, benchDir)
-    val persist = sys.env.getOrElse("SPARK_GRAFT_PERSIST", "true").toBoolean
     val t0 = System.nanoTime()
-    val (enriched, cleanup) = Pipeline.enrichPlanned(turns, tables, conf,
-      persistIntermediates = persist)
+    val (enriched, cleanup) = Pipeline.enrichPlanned(turns, tables, conf)
     try {
       // the FULL pipeline is in the timed pass: Pipeline.route writes the
       // per-severity alert sinks + both rollups (the metric label

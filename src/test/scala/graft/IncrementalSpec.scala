@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.fixtures.Gen
 import graft.model._
+import graft.oracle.RefModel
 
 /** Resume correctness (SURVEY §5.4): pipeline(A ∪ B) == pipeline(A) then
   * pipeline(B, state-after-A) — exactly, including frequency windows spanning
@@ -51,6 +52,29 @@ class IncrementalSpec extends SparkSuite {
 
     assert(split === single)
     assert(r1.metrics("n_input") === a.size.toLong)
+  }
+
+  test("manifest funnel of one run == RefModel: parse, dedup, whitelist, enrich, sinks") {
+    val fx = Gen.fixture(120)
+    val stateDir = Files.createTempDirectory("graft-state").toString
+    val outDir = Files.createTempDirectory("graft-out").toString
+    val r = Incremental.run(spark, spark.createDataset(fx.turns).toDF(), tables(fx),
+      fx.conf, stateDir, outDir, "0001")
+
+    def oracle(wl: Seq[WhitelistRule]) =
+      RefModel(fx.turns, fx.ioc, fx.rules, fx.ref, wl, fx.conf)
+    val rows = oracle(fx.whitelist)
+    val afterDedup = oracle(Nil).size.toLong
+    assert(afterDedup > rows.size, "fixture whitelist must drop rows")
+    val sinks = RefModel.sinkCounts(rows)
+    val want = Map(
+      "n_input" -> fx.turns.size.toLong,
+      "n_parse_ok" -> fx.turns.count(t => RefModel.parseFields(t, fx.conf)._2).toLong,
+      "n_after_dedup" -> afterDedup,
+      "n_survivors" -> rows.size.toLong,
+      "n_enriched" -> rows.size.toLong) ++
+      fx.conf.severityBands.map { case (_, s) => s"sink_$s" -> sinks.getOrElse(s, 0L) }
+    assert(r.metrics.view.filterKeys(want.contains).toMap === want)
   }
 
   test("second Incremental.run consumes state; alerts append; manifests track runs") {

@@ -23,9 +23,8 @@ class PlanShapeSpec extends SparkSuite {
   test("enrich plan: pinned shuffle budget, no cartesian, sanctioned windows only") {
     val fx = Gen.fixture(60)
     val tb = RuleTables(fx.ioc.toDF(), fx.rules, fx.ref.toDF(), fx.whitelist)
-    val enriched = Pipeline.enrichPlanned(
-      spark.createDataset(fx.turns).toDF(), tb, Gen.defaultConf,
-      persistIntermediates = false)._1
+    val enriched = Pipeline.enrich(
+      spark.createDataset(fx.turns).toDF(), tb, Gen.defaultConf)
     val plan = enriched.queryExecution.explainString(
       org.apache.spark.sql.execution.SimpleMode)
 
